@@ -1,8 +1,9 @@
 package graft.pipelines
 
 import graft.ops.Closure
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Full re-derivation of the succession-paths table from a raw successor
   * edge list — scripts/org-changes/build_all_org_changes.R:62-231, the
@@ -12,16 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the edge list (organisational changes) is tiny relative
   * to any fact table — change-EVENT-sized, thousands of rows for a national
-  * registry over decades — so the expansion broadcasts it and the finished
-  * table is collected to the driver for downstream broadcast use (the same
-  * bounded-artifact contract as the closure mapping and IVF centroids).
-  * The round-6 shape ran the refinement/classification steps as ~20 small
-  * broadcast-join jobs in SERIES — 6.8 s of pure job-scheduling latency at
-  * any data size. Since the classification operates on exactly the rows the
-  * final collect returns anyway, it now runs driver-side on the collected
-  * paths in one pass: TWO Spark jobs total (edge-table leaf + expansion
-  * collect), identical output (GoldenDerivePathsSpec pins all 677 rows
-  * byte-exact).
+  * registry over decades — and every expanded path holds at least one edge,
+  * so the finished table is no smaller than the edge list. The edge list is
+  * collected ONCE; the expansion, refinement and classification all run
+  * driver-side on it, and the finished table is a local relation for
+  * downstream broadcast use (the same bounded-artifact contract as the
+  * closure mapping and IVF centroids). Run as Spark joins, the same steps
+  * cost a job-scheduling latency per step at any data size.
   *
   * Input schema: (old_code, new_code, change_date) — one row per
   * succession edge; multiple rows per old_code encode a split.
@@ -30,59 +28,17 @@ import org.apache.spark.sql.functions._
 object OrgChangePaths {
 
   def derivePaths(successors: DataFrame, maxHops: Int = 3): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val spark = successors.sparkSession
-
-    val edges = successors.select(col("old_code").as("e_src"),
-      col("new_code").as("e_dst"), col("change_date").as("e_date"))
-    // a src with >1 successors is a split — every branch row is typed 'split'
-    // (build_all_org_changes.R:100-102: lengths(new_code_var) > 1).
-    // Leafed onto a cached RDD so the maxHops expansion joins broadcast the
-    // materialized rows instead of re-running the count aggregation (and so
-    // the analyzer sees a leaf, not maxHops copies of the groupBy subtree).
-    val withCnt = edges.join(
-      edges.groupBy(col("e_src")).agg(count(lit(1)).as("e_nsucc")), Seq("e_src"))
-    val edgesRdd = withCnt.rdd
-    edgesRdd.cache()
-    edgesRdd.count()
-    val edgesC = spark.createDataFrame(edgesRdd, withCnt.schema)
-
-    // Every code ever seen starts its own chain (R:62-68); codes that never
-    // changed drop out after expansion via the !is.na(new_code_1) filter.
-    val allCodes = edges.select(col("e_src").as("code"))
-      .union(edges.select(col("e_dst"))).distinct()
-
-    var m = allCodes.select(col("code").as("old_code"), col("code").as("new_code_0"))
-    for (i <- 1 to maxHops) {
-      m = m.join(broadcast(edgesC), col(s"new_code_${i - 1}") === col("e_src"), "left")
-        .withColumn(s"new_code_$i", col("e_dst"))
-        .withColumn(s"date_change_$i", col("e_date"))
-        .withColumn(s"change_type_$i",
-          when(col("e_dst").isNull, lit(null).cast("string"))
-            .when(col("e_nsucc") > 1, lit("split"))
-            .otherwise(lit("merger_or_name_change")))
-        .drop("e_src", "e_dst", "e_date", "e_nsucc")
-    }
-    val expanded = m.filter(col("new_code_1").isNotNull)
-    // The ONE collect: every step below reads only these rows, and the
-    // finished table is driver-materialized for broadcast reuse anyway.
-    val pathRows = expanded.collect()
-    edgesRdd.unpersist(blocking = false)
-
-    val sch = expanded.schema
-    val iOld = sch.fieldIndex("old_code")
-    val iNc = (0 to maxHops).map(i => sch.fieldIndex(s"new_code_$i"))
-    val iDate = (1 to maxHops).map(i => sch.fieldIndex(s"date_change_$i"))
-    val iCt = (1 to maxHops).map(i => sch.fieldIndex(s"change_type_$i"))
+    val succ = successors.select(col("old_code"), col("new_code"), col("change_date"))
+    val edgeRows = succ.collect()
     def str(r: Row, i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
+    // a src with >1 successors (duplicate edges included) is a split — every
+    // branch row is typed 'split' (build_all_org_changes.R:100-102:
+    // lengths(new_code_var) > 1)
+    val bySrc: Map[String, Array[Row]] = edgeRows.filter(!_.isNullAt(0)).groupBy(_.getString(0))
 
     // One mutable record per chain; ct is the refinement's working copy.
-    final class Chain(val row: Row) {
-      val old: String = str(row, iOld)
-      val nc: Array[String] = (0 to maxHops).map(i => str(row, iNc(i))).toArray
-      val ct: Array[String] =
-        (Seq[String](null) ++ (1 to maxHops).map(i => str(row, iCt(i - 1)))).toArray
+    final class Chain(val nc: Array[String], val date: Array[Any], val ct: Array[String]) {
+      def old: String = nc(0)
       def hasCt(v: String): Boolean = (1 to maxHops).exists(i => ct(i) == v)
       var finalCode: String = _
       var split: Boolean = false
@@ -90,7 +46,20 @@ object OrgChangePaths {
       var adj: Int = 0
       var inCompl: Boolean = false
     }
-    val paths = pathRows.map(new Chain(_))
+    // Every code ever seen starts its own chain (R:62-68) and follows up to
+    // maxHops edges, one chain per branch; codes that never changed drop
+    // out (the !is.na(new_code_1) filter).
+    var chains = edgeRows.flatMap(r => Seq(str(r, 0), str(r, 1))).filter(_ != null).distinct
+      .map(c => (Vector(c), Vector[Any](null), Vector[String](null)))
+    for (_ <- 1 to maxHops) chains = chains.flatMap { case (nc, d, ct) =>
+      bySrc.get(nc.last) match {
+        case Some(es) => es.map(e => (nc :+ str(e, 1), d :+ e.get(2),
+          ct :+ (if (e.isNullAt(1)) null else if (es.length > 1) "split" else "merger_or_name_change")))
+        case None => Array((nc :+ null, d :+ null, ct :+ null))
+      }
+    }
+    val paths = chains.collect { case (nc, d, ct) if nc(1) != null =>
+      new Chain(nc.toArray, d.toArray, ct.toArray) }
 
     // original paths = chains not contained in a longer one (R:112-117)
     val succCodes: Set[String] =
@@ -168,60 +137,64 @@ object OrgChangePaths {
     // clean defaults.
     val rows: Array[Row] = o.map { c =>
       val keep = c.inCompl && pcp.contains(c.finalCode)
-      val hopVals = (1 to maxHops).flatMap(i =>
-        Seq(c.row.get(iNc(i)), c.row.get(iDate(i - 1)), c.ct(i)))
       Row.fromSeq(
-        Seq(c.row.get(iOld), c.row.get(iNc(0))) ++ hopVals ++ Seq(
+        Seq(c.old, c.nc(0)) ++ (1 to maxHops).flatMap(i => Seq(c.nc(i), c.date(i), c.ct(i))) ++ Seq(
           c.finalCode,
           if (c.split) 1 else 0,
           if (keep) c.dpc else "no",
           if (keep) c.adj else 0,
           if (pcp.contains(c.finalCode)) 1 else 0))
     }
-    val byName = sch.fields.map(f => f.name -> f).toMap
+    val dateType = succ.schema("change_date").dataType
     val outSchema = StructType(
-      Seq(byName("old_code"), byName("new_code_0")) ++
-        (1 to maxHops).flatMap(i => Seq(byName(s"new_code_$i"),
-          byName(s"date_change_$i"), byName(s"change_type_$i"))) ++
-        Seq(StructField("final_code", byName("new_code_1").dataType),
+      Seq(StructField("old_code", StringType), StructField("new_code_0", StringType)) ++
+        (1 to maxHops).flatMap(i => Seq(StructField(s"new_code_$i", StringType),
+          StructField(s"date_change_$i", dateType), StructField(s"change_type_$i", StringType))) ++
+        Seq(StructField("final_code", StringType),
           StructField("experiences_split", IntegerType, nullable = false),
-          StructField("direct_path_complicated",
-            org.apache.spark.sql.types.StringType, nullable = false),
+          StructField("direct_path_complicated", StringType, nullable = false),
           StructField("adjacent_to_complicated", IntegerType, nullable = false),
           StructField("part_of_complicated_path", IntegerType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
+    successors.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
   }
 }
 
 /** Org-change lookup derivations over the committed succession-paths table
   * (`data/org-changes/all_org_changes_paths_2000_2018.csv`), re-expressing
-  * scripts/org-changes/build_trust_lookup.R Spark-first. The closure itself
-  * runs on the generic [[graft.ops.Closure]] pointer-doubling operator;
-  * GoldenOrgChangesSpec pins both stages against the committed outputs.
+  * scripts/org-changes/build_trust_lookup.R. The table is collected once
+  * and the closure runs on the driver kernel of the generic
+  * [[graft.ops.Closure]] pointer-doubling operator, so both results are
+  * local relations: a lookup referenced many times downstream broadcasts
+  * its rows without re-planning or re-running the closure.
   */
 object OrgChanges {
 
-  /** Edge list (src → dst) from the paths table's hop columns
-    * (new_code_0 = old_code, hops new_code_1..3; NA-terminated).
+  /** The paths table's chain columns, in hop order. */
+  private val ChainCols = Seq("old_code", "new_code_0", "new_code_1", "new_code_2", "new_code_3")
+
+  /** (old_code, final_code, hops) for every code of the collected chains
+    * (old_code and hops new_code_1..3; NA-terminated), over the edges
+    * new_code_{k-1} → new_code_k. Codes without a successor map to
+    * themselves at 0 hops; a split yields one row per terminal branch.
     */
-  def edgesFromPaths(paths: DataFrame): DataFrame = {
-    val hops = Seq("new_code_0" -> "new_code_1", "new_code_1" -> "new_code_2",
-      "new_code_2" -> "new_code_3")
-    hops.map { case (a, b) =>
-      paths.filter(col(b).isNotNull && col(b) =!= "NA")
-        .select(col(a).as("src"), col(b).as("dst"))
-    }.reduce(_ union _).distinct()
+  private def closure(rows: Array[Row]): Array[(String, String, Int)] = {
+    def code(r: Row, i: Int): Option[String] =
+      Option(r.getString(i)).filter(_ != "NA")
+    val edges = rows.flatMap(r => (2 to 4).flatMap(i => code(r, i).map(r.getString(i - 1) -> _))).distinct
+    val nodes = rows.flatMap(r => (0 +: (2 to 4)).flatMap(code(r, _))).distinct
+    val bySrc = Closure.double(edges.map(_._1), edges.map(_._2)).groupBy(p => edges(p._1)._1)
+    nodes.flatMap(x => bySrc.get(x) match {
+      case Some(ps) => ps.map { case (_, j, h) => (x, edges(j)._2, h) }
+      case None => Array((x, x, 0))
+    })
   }
 
-  /** Every code appearing anywhere in a chain. */
-  def allCodes(paths: DataFrame): DataFrame =
-    Seq("old_code", "new_code_1", "new_code_2", "new_code_3")
-      .map(c => paths.filter(col(c).isNotNull && col(c) =!= "NA").select(col(c).as("node")))
-      .reduce(_ union _).distinct()
-
   /** (old_code, final_code, hops): closure of every known code. */
-  def resolved(paths: DataFrame): DataFrame =
-    Closure.resolve(allCodes(paths), edgesFromPaths(paths))
+  def resolved(paths: DataFrame): DataFrame = paths.sparkSession.createDataFrame(
+    java.util.Arrays.asList(closure(paths.select(ChainCols.map(col): _*).collect())
+      .map { case (o, f, h) => Row(o, f, h) }: _*),
+    StructType(Seq(StructField("old_code", StringType), StructField("final_code", StringType),
+      StructField("hops", IntegerType, nullable = false))))
 
   /** Re-derivation of trust_lookup_uncomplicated_changes.csv
     * (build_trust_lookup.R:66-109): closure mapping, minus identity rows,
@@ -230,25 +203,24 @@ object OrgChanges {
     * swap, build_trust_lookup.R:104-107).
     */
   def trustLookup(paths: DataFrame): DataFrame = {
-    val mapping = resolved(paths)
-      .select(col("old_code"), col("final_code"))
-      .filter(col("old_code") =!= col("final_code"))
-      .distinct()
-
-    val unproblematic = paths
-      .filter(col("part_of_complicated_path") === "0")
-      .select(col("experiences_split").cast("int").as("experiences_split"), col("final_code"))
-      .distinct()
-
-    val joined = mapping.join(broadcast(unproblematic), Seq("final_code"), "left")
-      .withColumn("problematic", when(col("experiences_split").isNull, 1).otherwise(0))
-
-    // U6 value swap: clean splits become backwards mergers
-    val swap = col("experiences_split") === 1 && col("problematic") === 0
-    joined.select(
-      when(swap, col("final_code")).otherwise(col("old_code")).as("old_code"),
-      when(swap, col("old_code")).otherwise(col("final_code")).as("final_code"),
-      col("experiences_split"),
-      col("problematic"))
+    val rows = paths.select(ChainCols.map(col) ++ Seq(
+      col("part_of_complicated_path") === "0",
+      col("experiences_split").cast("int"), col("final_code")): _*).collect()
+    val mapping = closure(rows).collect { case (o, f, _) if o != f => (o, f) }.distinct
+    // (experiences_split, final_code) of the unproblematic paths, by final_code
+    val unproblematic = rows.filter(r => !r.isNullAt(5) && r.getBoolean(5))
+      .map(r => (r.get(6), r.getString(7))).distinct.groupBy(_._2)
+    val lookup = mapping.flatMap { case (o, f) =>
+      unproblematic.get(f) match {
+        case None => Array(Row(o, f, null, 1))
+        // U6 value swap: clean splits become backwards mergers
+        case Some(us) => us.map { case (split, _) =>
+          if (split == 1) Row(f, o, split, 0) else Row(o, f, split, if (split == null) 1 else 0) }
+      }
+    }
+    paths.sparkSession.createDataFrame(java.util.Arrays.asList(lookup: _*),
+      StructType(Seq(StructField("old_code", StringType), StructField("final_code", StringType),
+        StructField("experiences_split", IntegerType),
+        StructField("problematic", IntegerType, nullable = false))))
   }
 }

@@ -2,16 +2,30 @@
 """Local replica of the driver's correctness gate: run graft.Verify via sbt,
 then execute each oracle SQL in DuckDB over the same parquet tables and
 compare row sets, schemas, and value hashes. Driver-side tooling only —
-the Scala library never depends on this."""
-import json, os, subprocess, sys
+the Scala library never depends on this.
+
+A run starts from an empty OUT, so only this run's outputs are compared.
+Every oracle query in scope without an output is a FAIL (its Verify run
+threw). SPARK_GRAFT_ONLY=q13_closure,q44_org_paths limits both the run and
+the compare to those queries."""
+import json, os, shutil, subprocess, sys
 import duckdb
 import pandas as pd
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 SKIP_RUN = os.environ.get("SKIP_RUN") == "1"
+ONLY = {n.strip() for n in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if n.strip()}
+
+
+def in_scope(name):
+    return not ONLY or name in ONLY
+
 
 if not SKIP_RUN:
+    if os.path.isdir(OUT) and os.listdir(OUT) and not os.path.exists(f"{OUT}/oracle_sql.json"):
+        sys.exit(f"{OUT} is not empty and holds no oracle_sql.json: refusing to wipe it")
+    shutil.rmtree(OUT, ignore_errors=True)
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
         capture_output=True, text=True, cwd="/root/repo")
@@ -37,11 +51,15 @@ def canon(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
-n_pass = n_fail = 0
-for name in sorted(os.listdir(OUT)):
+outputs = sorted(n for n in os.listdir(OUT)
+                 if os.path.isdir(os.path.join(OUT, n)) and in_scope(n))
+missing = sorted(({n for n in oracles if in_scope(n)} | ONLY) - set(outputs))
+for name in missing:
+    print(f"{name}: FAIL  no output (the query failed or did not run)")
+
+n_pass, n_fail = 0, len(missing)
+for name in outputs:
     path = os.path.join(OUT, name)
-    if not os.path.isdir(path):
-        continue
     got = con.execute(f"SELECT * FROM '{path}/*.parquet'").df()
     if name not in oracles:
         print(f"{name}: rows-only check — {len(got)} rows {'OK' if len(got) >= 0 else ''}")
@@ -69,5 +87,5 @@ for name in sorted(os.listdir(OUT)):
         print(f"{name}: PASS  ({len(g)} rows)")
 
 print(f"\n{n_pass} pass, {n_fail} fail, "
-      f"{len([n for n in os.listdir(OUT) if os.path.isdir(os.path.join(OUT,n)) and n not in oracles])} rows-only")
+      f"{len([n for n in outputs if n not in oracles])} rows-only")
 sys.exit(1 if n_fail else 0)
